@@ -457,8 +457,8 @@ object SparkEntry {
       IndexCache.searcher(s, dir).prefix("s")
         .select(col("docId").as("doc_id"))),
     // the boolean query language end-to-end: implicit AND, OR, NOT, a
-    // prefix leaf, and a phrase leaf in one parsed tree evaluated as a
-    // single codegen'd predicate over per-doc matched-leaf sets
+    // prefix leaf, and a phrase leaf in one parsed tree, run by the shared
+    // per-segment evaluator (one posting fetch, one groupByKey)
     "q37_ii_query" -> ((s, dir) =>
       IndexCache.searcher(s, dir)
         .query("(spark OR filt*) AND window AND NOT \"sort merge\"")

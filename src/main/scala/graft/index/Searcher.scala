@@ -1,7 +1,10 @@
 package graft.index
 
 import graft.codec.{PBlock, PostingCodec, VarByte}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.query.QueryParser
+import graft.query.QueryParser.{AndNode, Leaf, LikeLeaf, NearLeaf, Node,
+  NotNode, OrNode, PhraseLeaf, PrefixLeaf, TermLeaf}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -94,10 +97,9 @@ class Searcher(val spark: SparkSession, val dir: String,
   def postings(terms: Seq[String]): Dataset[SegmentPosting] =
     postingsWhere(col("term").isin(terms: _*))
 
-  /** Postings rows under an arbitrary term-dictionary predicate — used by
-    * [[prefix]] where the pushed filter is `StringStartsWith` instead of
-    * `In` (segment files are term-sorted, so both become row-group min/max
-    * skipping in the Parquet scan).
+  /** Postings rows under an arbitrary term-dictionary predicate (`In`,
+    * `StringStartsWith`, LIKE: segment files are term-sorted, so each
+    * becomes row-group min/max skipping in the Parquet scan).
     */
   def postingsWhere(termPred: org.apache.spark.sql.Column): Dataset[SegmentPosting] = {
     val base = segments.where(termPred)
@@ -182,106 +184,88 @@ class Searcher(val spark: SparkSession, val dir: String,
     joined.drop("__rid")
   }
 
-  /** Single-term lookup: decode + emit docIds. No shuffle at all. */
-  def lookup(term: String): DataFrame =
-    postings(Seq(term)).flatMap { sp =>
-      sp.blocks.iterator.flatMap(b => PostingCodec.decodeDocsTfs(b)._1)
-    }.toDF("docId")
-
-  /** Conjunctive (AND) query — tagged's core tag-intersection semantics.
-    * Per-segment galloping k-way intersection; segments are independent docID
-    * ranges so results union without dedup.
+  /** The one evaluator behind every boolean, positional, expansion and
+    * trigram search: ONE posting fetch (an `In` over the exact terms, OR'd
+    * with each expansion's predicate), ONE groupByKey per (wave, segId),
+    * and [[Searcher.evalSegment]] per segment. Segments own disjoint docId
+    * ranges, so their results union without a dedup shuffle. A lone term
+    * stays a narrow decode. Returns (docId, matched): how many of the
+    * plan's top-level OR operands the doc matches.
     */
-  def and(terms: Seq[String]): DataFrame = {
-    val distinctTerms = terms.distinct
-    val nTerms = distinctTerms.size
-    if (nTerms == 0) return emptyDocIds
-    val stats = termStats(distinctTerms)
-    if (distinctTerms.exists(t => !stats.contains(t))) return emptyDocIds
-    postings(distinctTerms)
-      .groupByKey(sp => (sp.wave, sp.segId))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
-        val byTerm = it.toSeq.groupBy(_.term)
-        if (byTerm.size < nTerms) Iterator.empty
-        else {
-          val lists = byTerm.valuesIterator
-            .map(rs => Searcher.mergeRunDocs(rs)).toArray
-          Searcher.intersect(lists).iterator
-        }
-      }.toDF("docId")
+  private def evaluate(plan: Node): DataFrame = plan match {
+    case TermLeaf(t) =>
+      postings(Seq(t)).flatMap(sp => Searcher.mergeRunDocs(Seq(sp)))
+        .toDF("docId").withColumn("matched", lit(1))
+    case _ =>
+      val ls = QueryParser.leaves(plan)
+      val exact = ls.flatMap {
+        case TermLeaf(t) => Seq(t)
+        case PhraseLeaf(ts) => ts
+        case NearLeaf(a, b, _, _) => Seq(a, b)
+        case _ => Nil
+      }
+      val expanded = ls.collect {
+        case PrefixLeaf(p) => col("term").startsWith(p)
+        case LikeLeaf(p) =>
+          require(ls == Seq(plan), "a LIKE leaf is only ever a whole plan")
+          col("term").startsWith(p.takeWhile(c => c != '%' && c != '_')) &&
+            col("term").like(p)
+      }
+      val fetch = expanded ++ Option.when(exact.nonEmpty)(col("term").isin(exact: _*))
+      postingsWhere(fetch.reduce(_ || _))
+        .groupByKey(sp => (sp.wave, sp.segId))
+        .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
+          Searcher.evalSegment(plan, ls, it.toSeq)
+        }.toDF("docId", "matched")
   }
+
+  private def docIds(plan: Node): DataFrame = evaluate(plan).select("docId")
+
+  /** AND of the distinct `terms`; None when one is not in the dictionary. */
+  private def allOf(terms: Seq[String]): Option[Node] = {
+    val ts = terms.distinct
+    Option.when(ts.nonEmpty && termStats(ts).size == ts.size)(
+      ts.map[Node](TermLeaf).reduce(AndNode))
+  }
+
+  private def anyOf(terms: Seq[String]): Node =
+    balanced(terms.distinct.map(TermLeaf), OrNode)
+
+  /** `ns` joined by `op` as a balanced tree, so walks of a large fuzzy
+    * edit ball or needle set stay O(log n) deep.
+    */
+  private def balanced(ns: Seq[Node], op: (Node, Node) => Node): Node =
+    if (ns.size == 1) ns.head
+    else {
+      val (l, r) = ns.splitAt(ns.size / 2)
+      op(balanced(l, op), balanced(r, op))
+    }
+
+  /** Single-term lookup: decode + emit docIds. No shuffle at all. */
+  def lookup(term: String): DataFrame = docIds(TermLeaf(term))
+
+  /** Conjunctive (AND) query — tagged's core tag-intersection semantics:
+    * a per-segment galloping k-way intersection.
+    */
+  def and(terms: Seq[String]): DataFrame = allOf(terms).fold(emptyDocIds)(docIds)
 
   /** Disjunctive (OR) query: docId + number of distinct matched terms. */
-  def or(terms: Seq[String]): DataFrame = {
-    val distinctTerms = terms.distinct
-    if (distinctTerms.isEmpty) return emptyDocIds.withColumn("matched", lit(0))
-    postings(distinctTerms)
-      .groupByKey(sp => (sp.wave, sp.segId))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
-        val counts = new java.util.HashMap[Long, Int]()
-        it.foreach { sp =>
-          sp.blocks.foreach { b =>
-            PostingCodec.decodeDocsTfs(b)._1.foreach { d =>
-              counts.merge(d, 1, (a: Int, bb: Int) => a + bb)
-            }
-          }
-        }
-        val out = new Array[(Long, Int)](counts.size())
-        var i = 0
-        val e = counts.entrySet().iterator()
-        while (e.hasNext) { val kv = e.next(); out(i) = (kv.getKey, kv.getValue); i += 1 }
-        out.iterator
-      }.toDF("docId", "matched")
-  }
+  def or(terms: Seq[String]): DataFrame =
+    if (terms.isEmpty) emptyDocIds.withColumn("matched", lit(0))
+    else evaluate(anyOf(terms))
 
   /** AND over `must` minus OR over `mustNot`. */
-  def andNot(must: Seq[String], mustNot: Seq[String]): DataFrame = {
-    val pos = and(must)
-    if (mustNot.isEmpty) pos
-    else pos.join(or(mustNot).select("docId"), Seq("docId"), "left_anti")
-  }
+  def andNot(must: Seq[String], mustNot: Seq[String]): DataFrame =
+    if (mustNot.isEmpty) and(must)
+    else allOf(must).fold(emptyDocIds)(m => docIds(AndNode(m, NotNode(anyOf(mustNot)))))
 
   /** Exact phrase query via positional postings (index must be built with
     * positions). Adjacency chained across terms inside each segment group.
     */
   def phrase(terms: Seq[String]): DataFrame = {
     require(manifest.withPositions, "index built without positions")
-    if (terms.isEmpty) return emptyDocIds
-    if (terms.size == 1) return lookup(terms.head).distinct()
-    val n = terms.size
-    val distinctTerms = terms.distinct
-    val nDistinct = distinctTerms.size
-    postings(distinctTerms)
-      .groupByKey(sp => (sp.wave, sp.segId))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
-        val byTerm = it.toSeq.groupBy(_.term)
-        if (byTerm.size < nDistinct) Iterator.empty
-        else {
-          // positions per (slot in phrase): decode per term once
-          val decoded = byTerm.map { case (t, rs) => t -> Searcher.mergeRunFull(rs) }
-          val lists = decoded.valuesIterator.map(_._1).toArray
-          val cand = Searcher.intersect(lists)
-          cand.iterator.filter { d =>
-            // per-slot position arrays for this doc
-            val slotPos: Array[Array[Int]] = Array.tabulate(n) { s =>
-              val t = terms(s)
-              val (docs, _, poss) = decoded(t)
-              val idx = java.util.Arrays.binarySearch(docs, d)
-              poss(idx)
-            }
-            // phrase exists iff some p in slot0 with p+s in slot_s for all s
-            slotPos(0).exists { p =>
-              var s = 1
-              var ok = true
-              while (ok && s < n) {
-                if (java.util.Arrays.binarySearch(slotPos(s), p + s) < 0) ok = false
-                s += 1
-              }
-              ok
-            }
-          }
-        }
-      }.toDF("docId")
+    if (terms.isEmpty) emptyDocIds
+    else docIds(if (terms.size == 1) TermLeaf(terms.head) else PhraseLeaf(terms))
   }
 
   /** Prefix (trailing-wildcard) term query: docIds containing ANY term that
@@ -290,13 +274,11 @@ class Searcher(val spark: SparkSession, val dir: String,
     * matching dictionary range is a contiguous run of row groups, the same
     * seek the reference's BTreeMap range scan would do
     * (/root/reference/src/storage/block.rs:389-405). DocIds are deduped
-    * per segment in a hash set (a doc can match several expanded terms);
-    * segments own disjoint docId ranges, so results union withOUT a global
-    * distinct shuffle.
+    * per segment; disjoint segment docId ranges union without a distinct.
     */
   def prefix(p: String): DataFrame = {
     require(p.nonEmpty, "empty prefix")
-    expandedUnion(col("term").startsWith(p))
+    docIds(PrefixLeaf(p))
   }
 
   /** Wildcard term query: docIds containing ANY dictionary term matching
@@ -316,10 +298,7 @@ class Searcher(val spark: SparkSession, val dir: String,
     // the index can express.
     require(pattern.exists(c => c != '%' && c != '_'),
       s"pattern '$pattern' has no literal characters (matches every term)")
-    val prefix = pattern.takeWhile(c => c != '%' && c != '_')
-    val like = col("term").like(pattern)
-    expandedUnion(
-      if (prefix.nonEmpty) col("term").startsWith(prefix) && like else like)
+    docIds(LikeLeaf(pattern))
   }
 
   /** Fuzzy term query ("did you mean" matching): docIds containing ANY
@@ -346,8 +325,7 @@ class Searcher(val spark: SparkSession, val dir: String,
       .where(abs(length(col("term")) - lit(t.length)) <= maxDist &&
         levenshtein(col("term"), lit(t)) <= maxDist)
       .as[String].collect().toSeq
-    if (matched.isEmpty) spark.emptyDataset[Long].toDF("docId")
-    else expandedUnion(col("term").isin(matched: _*))
+    if (matched.isEmpty) emptyDocIds else docIds(anyOf(matched))
   }
 
   /** Exact substring search over a trigram-analyzed index — the Google Code
@@ -355,21 +333,13 @@ class Searcher(val spark: SparkSession, val dir: String,
     * Index", 2012; public swtch.com/~rsc/regexp/regexp4.html): a document
     * contains `needle` only if it contains EVERY 3-char window of it, so the
     * rarest `maxPlanTerms` windows (by dictionary df — a driver-side
-    * metadata lookup) are intersected through the ordinary posting path
-    * (`and`), and only the surviving candidates' source rows are verified
+    * metadata lookup) are intersected through the ordinary posting path,
+    * and only the surviving candidates' source rows are verified
     * with the codegen'd `Contains` predicate. The trigram conjunction is
     * NECESSARY, never sufficient (windows can match discontiguously), and
     * the verify pass is exact — so the prefilter only ever changes cost.
-    *
-    * Plan shape at scale: small candidate sets (the normal case for a
-    * selective needle) collapse to ZERO joins — the candidate docId set
-    * pushes into the docmeta scan (row-group skipping) and the recovered
-    * key set pushes into the corpus scan as an `In` filter; oversized
-    * candidate sets degrade to one left-semi join against the corpus.
-    * Needles shorter than one window fall back to the full verify scan
-    * (still exact; a trigram index simply cannot help them — Zoekt does the
-    * same). A needle with any zero-df window returns empty without touching
-    * the corpus or a single posting blob (stats-only dictionary lookup).
+    * Needles shorter than one window fall back to the full verify scan (a
+    * trigram index cannot help them — Zoekt does the same).
     *
     * `corpus` must be the table the index was built over, `idCol` the
     * column `IndexCache`-style builds stamp into docmeta `key` (string-cast
@@ -383,61 +353,19 @@ class Searcher(val spark: SparkSession, val dir: String,
 
   /** Multi-literal substring search — the pure-alternation regex case of
     * the trigram-index plan ("lit1|lit2|...": Cox 2012 §"OR of literals"):
-    * docs containing ANY of `needles`. Each needle contributes its rarest
-    * `maxPlanTerms` windows, and ONE posting fetch serves every needle's
-    * conjunction (the `In` pushdown carries the union of all chosen
-    * windows); per segment, each needle's window lists are intersected and
-    * the matches unioned with a hash-set dedup — disjoint segment docId
-    * ranges make that a global dedup for free, the [[expandedUnion]]
-    * discipline. Needles with a zero-df window drop out at the stats
-    * lookup; a sub-window needle forces the exact full verify scan (the
-    * index cannot bound it — same fallback as [[substring]]). The verify
-    * pass ORs the codegen'd `Contains` predicates, so the result is exactly
-    * the union of the per-needle exact relations.
+    * docs containing ANY of `needles`: the OR of each needle's window
+    * conjunction, one posting fetch for all of them. The verify pass ORs
+    * the codegen'd `Contains` predicates, so the result is exactly the
+    * union of the per-needle exact relations.
     */
   def substringAny(needles: Seq[String], corpus: DataFrame, idCol: String,
       textCol: String, maxPlanTerms: Int = 4,
       pushdownLimit: Int = 4096): DataFrame = {
     require(needles.nonEmpty && needles.forall(_.nonEmpty), "empty needle")
-    require(manifest.tokenizer.startsWith("trigram"),
-      s"substring search needs a trigram-analyzed index; this one is " +
-        s"'${manifest.tokenizer}' (IndexOptions.analyzer = \"trigram\")")
     val distinctNeedles = needles.distinct
-    val verified = distinctNeedles.map(n => col(textCol).contains(n))
-      .reduce(_ || _)
-    if (distinctNeedles.exists(_.length < graft.text.Trigram.N))
-      return corpus.where(verified).select(col(idCol))
-    val gramsByNeedle = distinctNeedles.map(n =>
-      graft.text.Trigram.gramsScala(n).toIndexedSeq.distinct)
-    val stats = termStats(gramsByNeedle.flatten.distinct)
-    // a needle with any zero-df window can match nothing: drop its plan
-    val plans: Array[Array[String]] = gramsByNeedle
-      .filter(_.forall(stats.contains))
-      .map(gs => gs.sortBy(g => stats(g).df)
-        .take(math.max(1, maxPlanTerms)).toArray)
-      .toArray
-    if (plans.isEmpty) return corpus.where(lit(false)).select(col(idCol))
-    val allGrams = plans.flatten.distinct.toIndexedSeq
-    val candidates = postings(allGrams)
-      .groupByKey(sp => (sp.wave, sp.segId))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
-        val byTerm = it.toSeq.groupBy(_.term)
-        val decoded = scala.collection.mutable.HashMap.empty[String, Array[Long]]
-        def docsOf(t: String): Array[Long] = decoded.getOrElseUpdate(t,
-          byTerm.get(t).map(Searcher.mergeRunDocs).getOrElse(Array.empty))
-        val seen = new java.util.HashSet[java.lang.Long]()
-        val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-        plans.foreach { g =>
-          if (g.forall(byTerm.contains)) {
-            Searcher.intersect(g.map(docsOf)).foreach { d =>
-              if (seen.add(d)) out += d
-            }
-          }
-        }
-        out.iterator
-      }.toDF("docId")
-    verifiedRows(candidates, corpus, idCol, verified, pushdownLimit)
-      .select(col(idCol))
+    trigramRows(distinctNeedles.map(Seq(_)),
+      distinctNeedles.map(n => col(textCol).contains(n)).reduce(_ || _),
+      corpus, idCol, maxPlanTerms, pushdownLimit).select(col(idCol))
   }
 
   /** Ordered multi-part search — the literal-concatenation regex case
@@ -449,32 +377,15 @@ class Searcher(val spark: SparkSession, val dir: String,
     * index), and the verify pass is the codegen'd `RLike` on the
     * quoted-literal pattern (`.*` matches identically across engines on
     * newline-free atoms: neither Java nor RE2 dot crosses newlines by
-    * default). Sub-window parts are simply left out of the index plan but
-    * stay in the verify regex — only if EVERY part is sub-window does the
-    * query fall back to the full verify scan.
+    * default). Sub-window parts stay in the verify regex only.
     */
   def substringOrdered(parts: Seq[String], corpus: DataFrame, idCol: String,
       textCol: String, maxPlanTerms: Int = 4,
       pushdownLimit: Int = 4096): DataFrame = {
     require(parts.nonEmpty && parts.forall(_.nonEmpty), "empty part")
-    require(manifest.tokenizer.startsWith("trigram"),
-      s"substring search needs a trigram-analyzed index; this one is " +
-        s"'${manifest.tokenizer}' (IndexOptions.analyzer = \"trigram\")")
     val pattern = parts.map(java.util.regex.Pattern.quote).mkString(".*")
-    val verified = col(textCol).rlike(pattern)
-    val plannable = parts.filter(_.length >= graft.text.Trigram.N)
-    if (plannable.isEmpty) return corpus.where(verified).select(col(idCol))
-    val gramsByPart = plannable.map(p =>
-      graft.text.Trigram.gramsScala(p).toIndexedSeq.distinct)
-    val stats = termStats(gramsByPart.flatten.distinct)
-    // any part with a zero-df window cannot appear -> the ordered match
-    // cannot exist anywhere
-    if (gramsByPart.exists(_.exists(g => !stats.contains(g))))
-      return corpus.where(lit(false)).select(col(idCol))
-    val chosen = gramsByPart.flatMap(gs =>
-      gs.sortBy(g => stats(g).df).take(math.max(1, maxPlanTerms))).distinct
-    verifiedRows(and(chosen), corpus, idCol, verified, pushdownLimit)
-      .select(col(idCol))
+    trigramRows(Seq(parts), col(textCol).rlike(pattern), corpus, idCol,
+      maxPlanTerms, pushdownLimit).select(col(idCol))
   }
 
   /** Substring occurrence top-k: the `k` docs with the most (non-
@@ -517,23 +428,39 @@ class Searcher(val spark: SparkSession, val dir: String,
         col(textCol).substr(start, end - start + 1).as("snippet"))
   }
 
-  /** [[substring]]'s verified candidate ROWS (all corpus columns) — the
-    * shared core of the projection variants above.
-    */
+  /** [[substring]]'s verified candidate ROWS (all corpus columns). */
   private def substringRows(needle: String, corpus: DataFrame, idCol: String,
       textCol: String, maxPlanTerms: Int, pushdownLimit: Int): DataFrame = {
     require(needle.nonEmpty, "empty needle")
+    trigramRows(Seq(Seq(needle)), col(textCol).contains(needle), corpus,
+      idCol, maxPlanTerms, pushdownLimit)
+  }
+
+  /** The trigram planner behind every substring search (Cox 2012): a doc
+    * can satisfy `verified` only if, for SOME group of literals, it holds
+    * every 3-char window of every literal in that group, so the plan ORs
+    * the groups' ANDs of each literal's rarest `maxPlanTerms` windows.
+    * Sub-window literals stay out of the plan; a group left with none
+    * forces the exact full verify scan. A group with a zero-df window
+    * drops out without touching a posting blob.
+    */
+  private def trigramRows(groups: Seq[Seq[String]], verified: Column,
+      corpus: DataFrame, idCol: String, maxPlanTerms: Int,
+      pushdownLimit: Int): DataFrame = {
     require(manifest.tokenizer.startsWith("trigram"),
       s"substring search needs a trigram-analyzed index; this one is " +
         s"'${manifest.tokenizer}' (IndexOptions.analyzer = \"trigram\")")
-    val verified = col(textCol).contains(needle)
-    if (needle.length < graft.text.Trigram.N) return corpus.where(verified)
-    val grams = graft.text.Trigram.gramsScala(needle).toIndexedSeq.distinct
-    val stats = termStats(grams)
-    if (grams.exists(g => !stats.contains(g))) return corpus.where(lit(false))
-    val chosen = grams.sortBy(g => stats(g).df)
-      .take(math.max(1, maxPlanTerms))
-    verifiedRows(and(chosen), corpus, idCol, verified, pushdownLimit)
+    val grams = groups.map(_.filter(_.length >= graft.text.Trigram.N)
+      .map(l => graft.text.Trigram.gramsScala(l).toIndexedSeq.distinct))
+    if (grams.exists(_.isEmpty)) return corpus.where(verified)
+    val stats = termStats(grams.flatten.flatten.distinct)
+    val plans = grams.filter(_.forall(_.forall(stats.contains))).map { g =>
+      g.flatMap(_.sortBy(stats(_).df).take(math.max(1, maxPlanTerms)))
+        .distinct.map[Node](TermLeaf).reduce(AndNode)
+    }
+    if (plans.isEmpty) corpus.where(lit(false))
+    else verifiedRows(docIds(balanced(plans, OrNode)), corpus, idCol, verified,
+      pushdownLimit)
   }
 
   /** Candidate docIds -> verified corpus rows. Small candidate sets (the
@@ -574,27 +501,6 @@ class Searcher(val spark: SparkSession, val dir: String,
     }
   }
 
-  /** Union of all docIds under a multi-term dictionary predicate. DocIds
-    * are deduped per segment in a hash set (a doc can match several
-    * expanded terms); segments own disjoint docId ranges, so the results
-    * union withOUT a global distinct shuffle.
-    */
-  private def expandedUnion(termPred: org.apache.spark.sql.Column): DataFrame =
-    postingsWhere(termPred)
-      .groupByKey(sp => (sp.wave, sp.segId))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
-        val seen = new java.util.HashSet[java.lang.Long]()
-        val out = scala.collection.mutable.ArrayBuffer[Long]()
-        it.foreach { sp =>
-          sp.blocks.foreach { b =>
-            PostingCodec.decodeDocsTfs(b)._1.foreach { d =>
-              if (seen.add(d)) out += d
-            }
-          }
-        }
-        out.iterator
-      }.toDF("docId")
-
   /** Prefix term suggestion ("did you mean" / search-box completion): the
     * top `n` dictionary terms starting with `p`, ranked by corpus document
     * frequency (ties by term asc). Pure stats-column aggregation — segments
@@ -617,30 +523,15 @@ class Searcher(val spark: SparkSession, val dir: String,
 
   /** Proximity query: docs where `a` and `b` occur within `k` token
     * positions of each other (`ordered` = `a` must come first). k = 1
-    * ordered is exactly [[phrase]] adjacency. Same per-segment shape as
-    * phrase — intersect the two doc lists, then a two-pointer min-gap walk
-    * over the sorted position arrays ([[Searcher.withinGap]], O(|pa|+|pb|)
-    * per candidate doc, no materialized position cross product).
+    * ordered is exactly [[phrase]] adjacency. Each candidate doc runs a
+    * two-pointer min-gap walk over the sorted position arrays
+    * ([[Searcher.withinGap]]: O(|pa|+|pb|), no position cross product).
     */
   def near(a: String, b: String, k: Int, ordered: Boolean = false): DataFrame = {
     require(manifest.withPositions, "index built without positions")
     require(k >= 1, "k must be >= 1")
     require(a != b, "near() terms must differ")
-    postings(Seq(a, b))
-      .groupByKey(sp => (sp.wave, sp.segId))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[SegmentPosting]) =>
-        val byTerm = it.toSeq.groupBy(_.term)
-        if (byTerm.size < 2) Iterator.empty
-        else {
-          val da = Searcher.mergeRunFull(byTerm(a))
-          val db = Searcher.mergeRunFull(byTerm(b))
-          Searcher.intersect(Array(da._1, db._1)).iterator.filter { d =>
-            val pa = da._3(java.util.Arrays.binarySearch(da._1, d))
-            val pb = db._3(java.util.Arrays.binarySearch(db._1, d))
-            Searcher.withinGap(pa, pb, k, ordered)
-          }
-        }
-      }.toDF("docId")
+    docIds(NearLeaf(a, b, k, ordered))
   }
 
   /** Faceted search: for the result set of a conjunctive base query, count
@@ -679,18 +570,14 @@ class Searcher(val spark: SparkSession, val dir: String,
   /** Execute a boolean query string (grammar: [[graft.query.QueryParser]] —
     * AND/OR/NOT, parens, implicit AND, `"quoted phrases"`, `prefix*`).
     *
-    * Plan: every distinct plain-term leaf resolves from ONE postings scan
-    * (term -> leafIds map captured in the closure); each prefix/phrase leaf
-    * contributes its own docId set with its leaf id attached. The union
-    * groups by docId into a matched-leaf-id set and the parsed tree becomes
-    * a single codegen'd `array_contains` predicate — one shuffle total
-    * (candidate-set sized), regardless of operator count, instead of a
-    * join/anti-join per boolean node. Queries satisfiable by a document
+    * The parsed tree IS the plan: [[evaluate]] serves every term, prefix
+    * and phrase leaf from one posting fetch and decides the tree per
+    * segment — one shuffle total, regardless of operator count, instead of
+    * a join/anti-join per boolean node. Queries satisfiable by a document
     * containing none of the leaves (pure negation, `a OR NOT b`) are
     * rejected: they select the unbounded complement of the corpus.
     */
   def query(q: String): DataFrame = {
-    import graft.query.QueryParser
     // the parser normalizes bare words through the WORD tokenizer, so on a
     // trigram-analyzed index every leaf would miss its (3-char) dictionary
     // and the query would silently return empty — fail loudly instead
@@ -704,33 +591,10 @@ class Searcher(val spark: SparkSession, val dir: String,
       throw QueryParser.ParseException(
         s"query '$q' matches documents containing none of its terms " +
           "(unbounded complement) — add at least one required positive clause")
-    val ls = QueryParser.leaves(ast)
-    val leafId: Map[QueryParser.Leaf, Int] = ls.zipWithIndex.toMap
-    val termIds: Map[String, Seq[Int]] = ls.collect {
-      case l @ QueryParser.TermLeaf(t) => t -> leafId(l)
-    }.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    if (termIds.nonEmpty) {
-      val tm = termIds // serializable capture (not the Searcher)
-      parts += postings(termIds.keys.toSeq).flatMap { sp =>
-        val ids = tm(sp.term)
-        sp.blocks.iterator
-          .flatMap(b => PostingCodec.decodeDocsTfs(b)._1.iterator)
-          .flatMap(d => ids.iterator.map(id => (d, id)))
-      }.toDF("docId", "leaf")
-    }
-    ls.foreach {
-      case l @ QueryParser.PrefixLeaf(p) =>
-        parts += prefix(p).withColumn("leaf", lit(leafId(l)))
-      case l @ QueryParser.PhraseLeaf(ts) =>
-        parts += phrase(ts).withColumn("leaf", lit(leafId(l)))
-      case _ => ()
-    }
-    parts.reduce(_ unionByName _)
-      .groupBy(col("docId"))
-      .agg(collect_set(col("leaf")).as("leaves"))
-      .where(QueryParser.toColumn(ast, leafId, col("leaves")))
-      .select("docId")
+    require(manifest.withPositions ||
+      !QueryParser.leaves(ast).exists(_.isInstanceOf[PhraseLeaf]),
+      "index built without positions")
+    docIds(ast)
   }
 
   /** "More like this" (relevance feedback): the top-k docs by BM25 over a
@@ -816,10 +680,6 @@ object Searcher {
     */
   val scoredCount = new java.util.concurrent.atomic.LongAdder()
 
-  /** False under GRAFT_WAND_NO_MINDL=1 (see TermCursor.ub). */
-  private[index] val useMinDlBound: Boolean =
-    !sys.env.get("GRAFT_WAND_NO_MINDL").contains("1")
-
   /** Concatenate posting runs of one (term, segId) across waves (wave order
     * = ascending docIds; reference rebase invariant) and decode docIds.
     */
@@ -845,7 +705,6 @@ object Searcher {
     (d.docIds, d.tfs, d.positions)
   }
 
-  /** K-way sorted intersection with galloping advance on the smallest list. */
   /** Min-gap existence test over two SORTED position arrays.
     * ordered: some pb(j) - pa(i) in [1, k]; unordered: some |pa(i) - pb(j)|
     * <= k. Two-pointer merge walk, O(|pa| + |pb|), no pair materialization.
@@ -866,6 +725,7 @@ object Searcher {
     false
   }
 
+  /** K-way sorted intersection with galloping advance on the smallest list. */
   def intersect(lists: Array[Array[Long]]): Array[Long] = {
     if (lists.isEmpty) return Array.empty
     if (lists.exists(_.isEmpty)) return Array.empty
@@ -909,6 +769,92 @@ object Searcher {
     out.result()
   }
 
+  /** Sorted union of duplicate-free sorted docId arrays, with how many
+    * of the arrays hold each docId: one concatenation and one sort.
+    */
+  private def union(lists: Iterable[Array[Long]]): (Array[Long], Array[Int]) = {
+    if (lists.size == 1) return (lists.head, Array.fill(lists.head.length)(1))
+    val all = Array.concat(lists.toSeq: _*)
+    java.util.Arrays.sort(all)
+    val counts = new Array[Int](all.length)
+    var n = 0
+    for (i <- all.indices)
+      if (n > 0 && all(i) == all(n - 1)) counts(n - 1) += 1
+      else { all(n) = all(i); counts(n) = 1; n += 1 }
+    (java.util.Arrays.copyOf(all, n), java.util.Arrays.copyOf(counts, n))
+  }
+
+  /** The operands of `n`'s chain of ANDs (`and`) or ORs, flattened. */
+  private def chain(n: Node, and: Boolean): Seq[Node] = n match {
+    case AndNode(a, b) if and => chain(a, and) ++ chain(b, and)
+    case OrNode(a, b) if !and => chain(a, and) ++ chain(b, and)
+    case _ => Seq(n)
+  }
+
+  private def negated(n: Node): Boolean = n match {
+    case NotNode(_) => true
+    case AndNode(a, b) => negated(a) || negated(b)
+    case OrNode(a, b) => negated(a) || negated(b)
+    case _: Leaf => false
+  }
+
+  /** Sorted docIds that every match of `n` is among — one k-way galloping
+    * intersection per AND chain, one union per OR chain — or None when a
+    * match may contain none of them (under a NOT). Exact when `n` has no
+    * NOT.
+    */
+  private def cover(n: Node, docs: Leaf => Array[Long]): Option[Array[Long]] = n match {
+    case l: Leaf => Some(docs(l))
+    case _: AndNode =>
+      val cs = chain(n, and = true).flatMap(cover(_, docs))
+      Option.when(cs.nonEmpty)(intersect(cs.toArray))
+    case _: OrNode =>
+      val cs = chain(n, and = false).map(cover(_, docs))
+      Option.when(cs.forall(_.isDefined))(union(cs.flatten)._1)
+    case NotNode(_) => None
+  }
+
+  /** One (wave, segId) group of [[Searcher.evaluate]]: resolve each leaf
+    * the plan asks about to a sorted docId array over the group's runs and
+    * emit (docId, matched top-level OR operands) for every match. Without
+    * a NOT the operands' [[cover]]s are exact, so one counted [[union]]
+    * is the answer; otherwise the plan's cover is the candidate set and
+    * [[QueryParser.eval]] decides each candidate.
+    */
+  private def evalSegment(plan: Node, leaves: Seq[Leaf],
+      rows: Seq[SegmentPosting]): Iterator[(Long, Int)] = {
+    val byTerm = rows.groupBy(_.term)
+    // docs holding every term of `ts` whose per-term positions `fit`
+    def positional(ts: Seq[String])(fit: Array[Array[Int]] => Boolean) = {
+      val runs = ts.map(t => mergeRunFull(byTerm.getOrElse(t, Nil))).toArray
+      intersect(runs.map(_._1)).filter(d =>
+        fit(runs.map(r => r._3(java.util.Arrays.binarySearch(r._1, d)))))
+    }
+    val memo = scala.collection.mutable.HashMap.empty[Leaf, Array[Long]]
+    def docs(l: Leaf): Array[Long] = memo.getOrElseUpdate(l, l match {
+      case TermLeaf(t) => mergeRunDocs(byTerm.getOrElse(t, Nil))
+      case PrefixLeaf(p) =>
+        union(byTerm.filter(_._1.startsWith(p)).values.map(mergeRunDocs))._1
+      // the whole plan: the fetch already kept only the LIKE-matching terms
+      case LikeLeaf(_) => union(byTerm.values.map(mergeRunDocs))._1
+      case PhraseLeaf(ts) => positional(ts)(pos => pos(0).exists(p =>
+        pos.indices.forall(s => java.util.Arrays.binarySearch(pos(s), p + s) >= 0)))
+      case NearLeaf(a, b, k, ordered) =>
+        positional(Seq(a, b))(pos => withinGap(pos(0), pos(1), k, ordered))
+    })
+    val ors = chain(plan, and = false).distinct
+    if (!negated(plan)) {
+      val (ds, n) = union(ors.map(cover(_, docs).get))
+      ds.indices.iterator.map(i => (ds(i), n(i)))
+    } else {
+      def has(l: Leaf, d: Long) = java.util.Arrays.binarySearch(docs(l), d) >= 0
+      // a plan that passes matchesEmptyDoc never matches a leafless doc, so
+      // the union of its leaves covers it (NOT NOT a has no AND/OR cover)
+      cover(plan, docs).getOrElse(union(leaves.map(docs))._1).iterator
+        .map(d => (d, ors.count(QueryParser.eval(_, has(_, d))))).filter(_._2 > 0)
+    }
+  }
+
   /** Per-term cursor over the compressed blocks of one segment run, with
     * block-level skipping on `maxDocId` (≙ BlockHeader per-tag offsets,
     * /root/reference/src/storage/block.rs:27-37: seek without full decode).
@@ -921,11 +867,7 @@ object Searcher {
   private final class TermCursor(blocks: Array[PBlock], val idf: Double,
       k1: Double, b: Double, avgdl: Double) {
     private val adl = if (avgdl > 0) avgdl else 1.0
-    @inline private def ub(maxTf: Int, minDl0: Int): Double = {
-      // GRAFT_WAND_NO_MINDL=1 forces the round-2 dl-free bound — a
-      // measurement toggle so TimeQuery's `scored` counter can quantify the
-      // per-block minDl pruning gain on identical indexes
-      val minDl = if (Searcher.useMinDlBound) minDl0 else 0
+    @inline private def ub(maxTf: Int, minDl: Int): Double = {
       val m = maxTf.toDouble
       idf * (m * (k1 + 1.0)) / (m + k1 * (1.0 - b + b * (minDl / adl)))
     }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object Percolate {
 
   private def eval(n: QueryParser.Node, toks: Array[String],
-      set: java.util.HashSet[String]): Boolean = n match {
+      set: java.util.HashSet[String]): Boolean = QueryParser.eval(n, {
     case QueryParser.TermLeaf(t) => set.contains(t)
     case QueryParser.PrefixLeaf(p) =>
       var i = 0
@@ -58,10 +58,8 @@ object Percolate {
         }
         ok
       }
-    case QueryParser.AndNode(l, r) => eval(l, toks, set) && eval(r, toks, set)
-    case QueryParser.OrNode(l, r) => eval(l, toks, set) || eval(r, toks, set)
-    case QueryParser.NotNode(c) => !eval(c, toks, set)
-  }
+    case l => throw new IllegalArgumentException(s"$l has no query-string form")
+  })
 
   /** A REQUIRED-TERM set for `n`: a set of terms such that every matching
     * document must contain at least one of them — the percolator's
@@ -81,7 +79,7 @@ object Percolate {
     n match {
       case QueryParser.TermLeaf(t) => Some(Set(t))
       case QueryParser.PhraseLeaf(ts) => ts.headOption.map(Set(_))
-      case QueryParser.PrefixLeaf(_) => None
+      case _: QueryParser.Leaf => None
       case QueryParser.AndNode(l, r) =>
         (requiredTerms(l), requiredTerms(r)) match {
           case (Some(a), Some(b)) => Some(if (a.size <= b.size) a else b)

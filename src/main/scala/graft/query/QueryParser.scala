@@ -1,8 +1,6 @@
 package graft.query
 
 import graft.text.Tokenize
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{array_contains, lit, not => notCol}
 
 /** Boolean query-string language over the inverted index.
   *
@@ -24,11 +22,10 @@ import org.apache.spark.sql.functions.{array_contains, lit, not => notCol}
   * (Text.scala spec v1), so `Spark-SQL` inside quotes means the phrase
   * `spark sql`. A bare word must normalize to exactly one index term.
   *
-  * The AST is deliberately engine-agnostic: `Searcher.query` resolves each
-  * distinct leaf to a docId set (ONE postings scan covers all plain-term
-  * leaves) and evaluates the tree as a codegen'd Catalyst predicate over
-  * each candidate doc's matched-leaf set — never as per-node DataFrame set
-  * algebra, which would shuffle once per operator.
+  * The AST is deliberately engine-agnostic. It is also `Searcher`'s plan
+  * for every search: one postings scan resolves each leaf per segment and
+  * [[eval]] decides the tree per candidate doc — never per-node DataFrame
+  * set algebra, which would shuffle once per operator.
   *
   * Pure-negation safety: a query satisfiable by a document containing NONE
   * of its leaves (e.g. `NOT a`, `a OR NOT b`) would match the unbounded
@@ -43,6 +40,11 @@ object QueryParser {
   final case class TermLeaf(term: String) extends Leaf
   final case class PrefixLeaf(prefix: String) extends Leaf
   final case class PhraseLeaf(terms: Seq[String]) extends Leaf
+  /** `a` and `b` within `k` positions (`ordered`: `a` first); no syntax. */
+  private[graft] final case class NearLeaf(a: String, b: String, k: Int,
+      ordered: Boolean) extends Leaf
+  /** Any dictionary term matching the SQL LIKE `pattern`; no syntax. */
+  private[graft] final case class LikeLeaf(pattern: String) extends Leaf
   final case class AndNode(left: Node, right: Node) extends Node
   final case class OrNode(left: Node, right: Node) extends Node
   final case class NotNode(child: Node) extends Node
@@ -174,27 +176,16 @@ object QueryParser {
     out.toSeq
   }
 
+  /** Evaluate the tree with `leaf` deciding each leaf (short-circuit). */
+  def eval(n: Node, leaf: Leaf => Boolean): Boolean = n match {
+    case l: Leaf => leaf(l)
+    case AndNode(a, b) => eval(a, leaf) && eval(b, leaf)
+    case OrNode(a, b) => eval(a, leaf) || eval(b, leaf)
+    case NotNode(c) => !eval(c, leaf)
+  }
+
   /** True iff the query matches a document containing none of its leaves —
     * such a query selects the unbounded complement and must be rejected.
     */
-  def matchesEmptyDoc(n: Node): Boolean = {
-    def ev(x: Node): Boolean = x match {
-      case _: Leaf => false
-      case AndNode(a, b) => ev(a) && ev(b)
-      case OrNode(a, b) => ev(a) || ev(b)
-      case NotNode(c) => !ev(c)
-    }
-    ev(n)
-  }
-
-  /** Compile the tree to a Catalyst predicate over a matched-leaf-id array
-    * column — pure built-ins (`array_contains`/AND/OR/NOT), so the final
-    * filter stays inside whole-stage codegen.
-    */
-  def toColumn(n: Node, leafId: Map[Leaf, Int], leavesCol: Column): Column = n match {
-    case l: Leaf => array_contains(leavesCol, lit(leafId(l)))
-    case AndNode(a, b) => toColumn(a, leafId, leavesCol) && toColumn(b, leafId, leavesCol)
-    case OrNode(a, b) => toColumn(a, leafId, leavesCol) || toColumn(b, leafId, leavesCol)
-    case NotNode(c) => notCol(toColumn(c, leafId, leavesCol))
-  }
+  def matchesEmptyDoc(n: Node): Boolean = eval(n, _ => false)
 }

@@ -66,6 +66,13 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("jaccardPairs rejects thresholds outside (0, 1]") {
+    // 0 would run the full quadratic self-join; > 1 can match nothing
+    for (t <- Seq(0.0, 1.5))
+      assertThrows[IllegalArgumentException](
+        Dedup.jaccardPairs(planted, "doc_id", "text", n = 3, threshold = t))
+  }
+
   test("minhash LSH candidates contain all planted duplicates with sane estimates") {
     val cand = Dedup.minhashCandidates(planted, "doc_id", "text")
       .as[(Long, Long, Double)].collect()

@@ -34,6 +34,20 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("StringStartsWith(term,w1"), plan)
   }
 
+  test("andNot and a prefix+phrase query: one segments scan, one exchange") {
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+      val lines = df.queryExecution.executedPlan.toString.linesIterator.toSeq
+      (lines.count(_.contains("FileScan")),
+        lines.count(l => l.contains("FileScan") && l.contains("/segments")),
+        lines.count(_.contains("Exchange")))
+    }
+    assert(shape(s.andNot(Seq("w3", "common"), Seq("w21", "w9"))) == ((1, 1, 1)))
+    assert(shape(s.query("w1* AND \"w3 w21\" AND NOT w9")) == ((1, 1, 1)))
+    // a single term stays a narrow decode: no shuffle at all
+    assert(shape(s.lookup("w3"))._3 == 0)
+    assert(shape(s.phrase(Seq("w3")))._3 == 0)
+  }
+
   test("suggest is a stats-only scan: prefix pushed, posting blobs pruned") {
     val plan = s.suggest("w1", 10).queryExecution.executedPlan.toString
     assert(plan.contains("StringStartsWith(term,w1"), plan)

@@ -271,6 +271,53 @@ class QuerySpec extends SparkSpec {
     assert(docSet(got) == expected)
   }
 
+  test("multi-wave and compacted indexes answer every search like one wave") {
+    // the same docs as `s`, built as 3 waves cut at docIds 1000 and 2000:
+    // with 512 docs per segment, segIds 1 and 3 straddle a wave boundary
+    val dd = scratch("queryspec-waves")
+    val noTs = docs.drop("ts")
+    IndexBuilder.build(spark, noTs.where(col("docId") < 1000L), dd,
+      IndexOptions(docsPerSegment = 512))
+    IndexBuilder.append(spark,
+      noTs.where(col("docId") >= 1000L && col("docId") < 2000L), dd)
+    IndexBuilder.append(spark, noTs.where(col("docId") >= 2000L), dd)
+    val ph = Tokenize.tokenizeScala(
+      docs.orderBy("docId").select("text").as[String].head()).take(2).toSeq
+    def answers(x: Searcher): Seq[Iterable[Any]] = Seq(
+      docSet(x.lookup(mid)),
+      docSet(x.and(Seq(head, mid))),
+      x.or(Seq(mid, tail, "term0100")).as[(Long, Int)].collect().toMap,
+      docSet(x.andNot(Seq(head, "term0020"), Seq(mid))),
+      docSet(x.phrase(ph)),
+      docSet(x.near(head, mid, 4)),
+      docSet(x.prefix("term01")),
+      docSet(x.wildcard("term0_4%")),
+      docSet(x.fuzzy("term0040")),
+      docSet(x.query(
+        s"""(term01* OR "${ph.mkString(" ")}") AND $head NOT $tail""")))
+    val single = answers(s)
+    assert(single.forall(_.nonEmpty), "every search must match something")
+    val waved = new Searcher(spark, dd)
+    assert(waved.manifest.waves.size == 3)
+    assert(answers(waved) == single)
+    Compactor.compact(spark, dd)
+    val compacted = new Searcher(spark, dd)
+    assert(compacted.manifest.waves.size < 3)
+    assert(answers(compacted) == single)
+  }
+
+  test("phrase leaves on an index built without positions are rejected") {
+    val dd = scratch("queryspec-nopos")
+    IndexBuilder.build(spark, docs.where(col("docId") < 600L), dd,
+      IndexOptions(docsPerSegment = 512, withPositions = false))
+    val np = new Searcher(spark, dd)
+    assert(docSet(np.query(s"$head AND NOT $mid")).nonEmpty)
+    for (q <- Seq(s""""$head $mid"""", s"""$head AND NOT "$mid $tail""""))
+      assertThrows[IllegalArgumentException](np.query(q))
+    assertThrows[IllegalArgumentException](np.phrase(Seq(head, mid)))
+    assertThrows[IllegalArgumentException](np.near(head, mid, 2))
+  }
+
   test("pure-negation queries are rejected, not silently empty") {
     assertThrows[graft.query.QueryParser.ParseException](s.query(s"NOT $head"))
     assertThrows[graft.query.QueryParser.ParseException](
